@@ -2,11 +2,19 @@
 (reference /root/reference/parsers/states.ts:18-221 CONTENT_STREAM/IMAGEDATA
 and /root/reference/graphics/stream.ts).
 
-The tokenizer produces {'operands': [...], 'operator': str, 'alias': str}
-operations; the interpreter executes the semantically live subset (text
-state/positioning/showing, graphics state, XObject recursion) and treats
-path/color/clip/shading/marked-content operators as operand-consuming
-no-ops, exactly as the reference does.
+The tokenizer produces {'operands': [...], 'operator': str} operations.
+The interpreter executes only the 21 operators that move or show text:
+
+  graphics state   q Q cm gs
+  XObjects         Do
+  text objects     BT ET
+  text state       Tc Tw Tz TL Tf Ts
+  text position    Td TD Tm T*
+  text showing     Tj TJ ' "
+
+Every other operator (path, paint, clip, color, shading, inline image,
+marked content, BX/EX, d0/d1, Tr, w J j M d ri i) and every unknown one
+is an operand-consuming no-op, exactly as the reference does.
 """
 from __future__ import annotations
 
@@ -23,54 +31,12 @@ from .objects import (
     unescape_name,
 )
 
-# Table of the 72 aliased operators (reference parsers/states.ts:36-126;
-# operator set from PDF 32000-1:2008 Annex A).
-OPERATOR_ALIASES = {
-    "w": "setLineWidth", "J": "setLineCap", "j": "setLineJoin",
-    "M": "setMiterLimit", "d": "setDashPattern", "ri": "setRenderingIntent",
-    "i": "setFlatnessTolerance", "gs": "setGraphicsStateParameters",
-    "q": "pushGraphicsState", "Q": "popGraphicsState", "cm": "setCTM",
-    "m": "moveTo", "l": "appendLine", "c": "appendCurve123",
-    "v": "appendCurve23", "y": "appendCurve13", "h": "closePath",
-    "re": "appendRectangle",
-    "S": "stroke", "s": "closeAndStroke", "f": "fill", "F": "fillCompat",
-    "f*": "fillEvenOdd", "B": "fillThenStroke", "B*": "fillThenStrokeEvenOdd",
-    "b": "closeAndFillThenStroke", "b*": "closeAndFillThenStrokeEvenOdd",
-    "n": "closePathNoop",
-    "W": "clip", "W*": "clipEvenOdd",
-    "BT": "startTextBlock", "ET": "endTextBlock",
-    "Tc": "setCharSpacing", "Tw": "setWordSpacing", "Tz": "setHorizontalScale",
-    "TL": "setLeading", "Tf": "setFont", "Tr": "setRenderingMode",
-    "Ts": "setRise",
-    "Td": "adjustCurrentPosition", "TD": "adjustCurrentPositionWithLeading",
-    "Tm": "setTextMatrix", "T*": "newLine",
-    "Tj": "showString", "TJ": "showStrings",
-    "'": "newLineAndShowString", '"': "newLineAndShowStringWithSpacing",
-    "d0": "setType3FontCharWidthShapeColor", "d1": "setType3FontCharWidthShape",
-    "CS": "setStrokeColorSpace", "cs": "setFillColorSpace",
-    "SC": "setStrokeColorSpace2", "SCN": "setStrokeColorSpace3",
-    "sc": "setFillColorSpace2", "scn": "setFillColorSpace3",
-    "G": "setStrokeGray", "g": "setFillGray",
-    "RG": "setStrokeColor", "rg": "setFillColor",
-    "K": "setStrokeCMYK", "k": "setFillCMYK",
-    "sh": "shadingPattern",
-    "BI": "beginInlineImage", "EI": "endInlineImage",
-    "Do": "drawObject",
-    "MP": "designatedMarkedContentPoint",
-    "DP": "designatedMarkedContentPointProperties",
-    "BMC": "beginMarkedContent", "BDC": "beginMarkedContentWithDictionary",
-    "EMC": "endMarkedContent",
-    "BX": "beginCompatibility", "EX": "endCompatibility",
-}
-
 _WS_RE = re.compile(rb"\s+")
 _HEX_RE = re.compile(rb"<([A-Fa-f0-9 \r\n]*)>")
 _BOOL_RE = re.compile(rb"(true|false)")
 _NAME_RE = re.compile(rb"/([!-'*-.0-;=?-Z\\^-z|~]+)")
-_FLOAT_RE = re.compile(rb"-?[0-9]*\.[0-9]+")
-_INT_RE = re.compile(rb"-?[0-9]+")
-# one match for either numeric form (float alternative first, same
-# precedence as the FLOAT-then-INT attempts it replaces)
+# one match for either numeric form (float alternative first: the
+# reference tries FLOAT before INT)
 _NUMBER_RE = re.compile(rb"-?(?:[0-9]*\.[0-9]+|[0-9]+)")
 _COMMENT_RE = re.compile(rb"%.+?(\r\n|\n|\r)")
 _OPERATOR_RE = re.compile(rb"[A-Za-z'\"]+[01*]?")
@@ -94,9 +60,6 @@ def _consume_image_data(buf: Buf) -> bytes:
             out.append(data[buf.pos])
             buf.pos += 1
     return bytes(out)
-
-
-_CLEAN_WS_RE = re.compile(rb"\s+")
 
 
 def parse_content_stream(buffer: bytes) -> list[dict]:
@@ -141,7 +104,7 @@ def parse_content_stream(buffer: bytes) -> list[dict]:
             m = _HEX_RE.match(data, pos)
             if m:
                 buf.pos = m.end()
-                hexstring = _CLEAN_WS_RE.sub(b"", m.group(1))
+                hexstring = _WS_RE.sub(b"", m.group(1))
                 if len(hexstring) % 2 == 1:
                     hexstring = hexstring[:-1]  # JS Buffer.from(.., 'hex') drops odd tail
                 stack.append(bytes.fromhex(hexstring.decode("ascii")))
@@ -160,9 +123,7 @@ def parse_content_stream(buffer: bytes) -> list[dict]:
                 buf.pos = pos + 2
                 image_data = _consume_image_data(buf)
                 stack.append(image_data)
-                operations.append(
-                    {"operands": stack, "operator": "EI", "alias": "endInlineImage"}
-                )
+                operations.append({"operands": stack, "operator": "EI"})
                 stack = []
                 continue
             m = _BOOL_RE.match(data, pos)
@@ -173,12 +134,9 @@ def parse_content_stream(buffer: bytes) -> list[dict]:
             m = _OPERATOR_RE.match(data, pos)
             if m:
                 buf.pos = m.end()
-                operator = m.group(0).decode("latin-1")
-                operations.append({
-                    "operands": stack,
-                    "operator": operator,
-                    "alias": OPERATOR_ALIASES.get(operator),
-                })
+                operations.append(
+                    {"operands": stack, "operator": m.group(0).decode("latin-1")}
+                )
                 stack = []
                 continue
         raise ValueError(
@@ -192,7 +150,7 @@ class TextState:
 
     __slots__ = (
         "char_spacing", "word_spacing", "horizontal_scaling", "leading",
-        "font_name", "font_size", "rendering_mode", "rise",
+        "font_name", "font_size", "rise",
     )
 
     def __init__(self):
@@ -202,7 +160,6 @@ class TextState:
         self.leading = 0.0
         self.font_name = None
         self.font_size = None
-        self.rendering_mode = 0
         self.rise = 0.0
 
     def clone(self) -> "TextState":
@@ -213,53 +170,34 @@ class TextState:
 
 
 class GraphicsState:
-    """reference graphics/stream.ts:87-109."""
+    """The part of reference graphics/stream.ts:87-109 that text reads."""
 
-    __slots__ = (
-        "ct_matrix", "stroke_color", "fill_color", "line_width", "line_cap",
-        "line_join", "miter_limit", "dash_array", "dash_phase",
-        "rendering_intent", "flatness_tolerance", "text_state",
-    )
+    __slots__ = ("ct_matrix", "text_state")
 
     def __init__(self):
         self.ct_matrix = MAT3_IDENT
-        self.stroke_color = None
-        self.fill_color = None
-        self.line_width = None
-        self.line_cap = None
-        self.line_join = None
-        self.miter_limit = None
-        self.dash_array = None
-        self.dash_phase = None
-        self.rendering_intent = None
-        self.flatness_tolerance = None
         self.text_state = TextState()
 
     def clone(self) -> "GraphicsState":
         other = GraphicsState.__new__(GraphicsState)
-        for slot in GraphicsState.__slots__:
-            value = getattr(self, slot)
-            if slot == "text_state":
-                value = value.clone()
-            elif isinstance(value, list):
-                value = list(value)
-            setattr(other, slot, value)
+        other.ct_matrix = self.ct_matrix
+        other.text_state = self.text_state.clone()
         return other
 
 
-class DrawingContext:
-    """Stateful interpreter; subclass and override show_string / emission
-    (reference graphics/stream.ts:122-894). The textMatrix/textLineMatrix
-    do not persist across BT..ET blocks; textState does."""
+class TextAtomDrawingContext:
+    """Stateful interpreter collecting positioned TextAtoms into
+    ``text_atoms`` (reference graphics/stream.ts:122-894). The
+    textMatrix/textLineMatrix do not persist across BT..ET blocks;
+    textState does."""
 
-    def __init__(self, resources, depth: int = 0):
+    def __init__(self, text_atoms: list, resources):
+        self.text_atoms = text_atoms
         self.resources_stack = [resources]
         self.graphics_state_stack = [GraphicsState()]
         self.text_matrix = None
         self.text_line_matrix = None
-        self.depth = depth
-        # font memo (used by TextAtomDrawingContext.showString); lives on
-        # the base so drawObject can invalidate it around resource swaps
+        # font memo for show_string, invalidated around resource swaps
         self._memo_font_key: tuple[int, str] | None = None
         self._memo_font = None
 
@@ -299,306 +237,105 @@ class DrawingContext:
 
     # -- dispatch -------------------------------------------------------------
 
-    def apply_operation(self, alias, operands: list) -> None:
-        func = getattr(self, alias, None) if alias else None
-        if func is not None:
-            func(*operands)
-        # unknown/unaliased operators: consume operands and continue
-        # (reference graphics/stream.ts:791-793)
-
     def apply_content_stream(self, content_stream_buffer: bytes) -> None:
+        operators = self.OPERATORS
         for op in parse_content_stream(content_stream_buffer):
-            self.apply_operation(op["alias"], op["operands"])
+            handler = operators.get(op["operator"])
+            if handler is not None:
+                handler(self, *op["operands"])
+            # any other operator: consume its operands and continue
+            # (reference graphics/stream.ts:791-793)
 
-    # -- special graphics state (q, Q, cm) ------------------------------------
+    # -- special graphics state (q, Q, cm, gs) ----------------------------------
 
-    def pushGraphicsState(self):
+    def push_graphics_state(self):
         self.graphics_state_stack.append(self.graphics_state.clone())
 
-    def popGraphicsState(self):
+    def pop_graphics_state(self):
         self.graphics_state_stack.pop()
 
-    def setCTM(self, a, b, c, d, e, f):
+    def set_ctm(self, a, b, c, d, e, f):
         self.graphics_state.ct_matrix = mat3mul(
             (a, b, 0.0, c, d, 0.0, e, f, 1.0), self.graphics_state.ct_matrix
         )
 
+    def set_graphics_state_parameters(self, dict_name):
+        # ExtGState keys are looked up then ignored (reference :334-341)
+        if self.resources is not None:
+            self.resources.get_ext_gstate(dict_name)
+
     # -- XObjects (Do): reference graphics/stream.ts:803-846 ------------------
 
-    def drawObject(self, name):
+    def draw_object(self, name):
         xobject = self.resources.get_xobject(name)
         if xobject is None:
             raise ValueError(f"Cannot draw undefined XObject: {name}")
         if xobject.subtype != "Form":
             return  # Image/PS XObjects ignored
-        object_depth = self.depth + 1
-        if object_depth >= 5:
-            return  # recursion cap (reference :815)
-        self.pushGraphicsState()
+        if len(self.resources_stack) >= 5:
+            return  # recursion cap (reference :815): page + 4 nested forms
+        self.push_graphics_state()
         matrix = xobject.dictionary.get("Matrix")
         if matrix:
-            self.setCTM(*matrix)
-        next_resources = xobject.resources or self.resources
-        self.resources_stack.append(next_resources)
+            self.set_ctm(*matrix)
+        self.resources_stack.append(xobject.resources or self.resources)
         # the id()-keyed font memo could alias a recycled Resources
         # object across pushes: invalidate at both swap points
         self._memo_font_key = None
-        self.depth += 1
         self.apply_content_stream(xobject.buffer)
-        self.depth -= 1
         self.resources_stack.pop()
         self._memo_font_key = None
-        self.popGraphicsState()
+        self.pop_graphics_state()
 
-    # -- general graphics state (stored only) ----------------------------------
+    # -- text objects and text state ---------------------------------------------
 
-    def setLineWidth(self, w):
-        self.graphics_state.line_width = w
-
-    def setLineCap(self, c):
-        self.graphics_state.line_cap = c
-
-    def setLineJoin(self, j):
-        self.graphics_state.line_join = j
-
-    def setMiterLimit(self, m):
-        self.graphics_state.miter_limit = m
-
-    def setDashPattern(self, dash_array, dash_phase):
-        self.graphics_state.dash_array = dash_array
-        self.graphics_state.dash_phase = dash_phase
-
-    def setRenderingIntent(self, intent):
-        self.graphics_state.rendering_intent = intent
-
-    def setFlatnessTolerance(self, flatness):
-        self.graphics_state.flatness_tolerance = flatness
-
-    def setGraphicsStateParameters(self, dict_name):
-        # ExtGState keys are looked up then ignored (reference :334-341)
-        if self.resources is not None:
-            self.resources.get_ext_gstate(dict_name)
-
-    # -- path construction / painting / clipping: logged no-ops ----------------
-
-    def moveTo(self, x, y):
-        pass
-
-    def appendLine(self, x, y):
-        pass
-
-    def appendCurve123(self, x1, y1, x2, y2, x3, y3):
-        pass
-
-    def appendCurve23(self, x2, y2, x3, y3):
-        pass
-
-    def appendCurve13(self, x1, y1, x3, y3):
-        pass
-
-    def closePath(self):
-        pass
-
-    def appendRectangle(self, x, y, width, height):
-        pass
-
-    def stroke(self):
-        pass
-
-    def closeAndStroke(self):
-        self.closePath()
-        self.stroke()
-
-    def fill(self):
-        pass
-
-    def fillCompat(self):
-        self.fill()
-
-    def fillEvenOdd(self):
-        pass
-
-    def fillThenStroke(self):
-        pass
-
-    def fillThenStrokeEvenOdd(self):
-        pass
-
-    def closeAndFillThenStroke(self):
-        self.closePath()
-        self.fillThenStroke()
-
-    def closeAndFillThenStrokeEvenOdd(self):
-        self.closePath()
-        self.fillThenStrokeEvenOdd()
-
-    def closePathNoop(self):
-        pass
-
-    def clip(self):
-        pass
-
-    def clipEvenOdd(self):
-        pass
-
-    # -- colors (stored only; tuples stand in for the Color classes) -----------
-
-    def setStrokeColorSpace(self, name):
-        pass
-
-    def setFillColorSpace(self, name):
-        pass
-
-    def setStrokeColorSpace2(self, *components):
-        pass
-
-    def setStrokeColorSpace3(self, *components):
-        pass
-
-    def setFillColorSpace2(self, *components):
-        pass
-
-    def setFillColorSpace3(self, *components):
-        pass
-
-    def setStrokeGray(self, gray):
-        self.graphics_state.stroke_color = ("gray", gray)
-
-    def setFillGray(self, gray):
-        self.graphics_state.fill_color = ("gray", gray)
-
-    def setStrokeColor(self, r, g, b):
-        self.graphics_state.stroke_color = ("rgb", r, g, b)
-
-    def setFillColor(self, r, g, b):
-        self.graphics_state.fill_color = ("rgb", r, g, b)
-
-    def setStrokeCMYK(self, c, m, y, k):
-        self.graphics_state.stroke_color = ("cmyk", c, m, y, k)
-
-    def setFillCMYK(self, c, m, y, k):
-        self.graphics_state.fill_color = ("cmyk", c, m, y, k)
-
-    def shadingPattern(self, name):
-        pass
-
-    def beginInlineImage(self):
-        pass
-
-    def endInlineImage(self, *args):
-        pass
-
-    # -- text objects -----------------------------------------------------------
-
-    def startTextBlock(self):
+    def start_text_block(self):
         self.text_matrix = self.text_line_matrix = MAT3_IDENT
 
-    def endTextBlock(self):
+    def end_text_block(self):
         self.text_matrix = self.text_line_matrix = None
 
-    # -- text state --------------------------------------------------------------
-
-    def setCharSpacing(self, char_space):
+    def set_char_spacing(self, char_space):
         self.graphics_state.text_state.char_spacing = char_space
 
-    def setWordSpacing(self, word_space):
+    def set_word_spacing(self, word_space):
         self.graphics_state.text_state.word_spacing = word_space
 
-    def setHorizontalScale(self, scale):
+    def set_horizontal_scale(self, scale):
         self.graphics_state.text_state.horizontal_scaling = scale
 
-    def setLeading(self, leading):
+    def set_leading(self, leading):
         self.graphics_state.text_state.leading = leading
 
-    def setFont(self, font, size):
+    def set_font(self, font, size):
         self.graphics_state.text_state.font_name = font
         self.graphics_state.text_state.font_size = size
 
-    def setRenderingMode(self, render):
-        self.graphics_state.text_state.rendering_mode = render
-
-    def setRise(self, rise):
+    def set_rise(self, rise):
         self.graphics_state.text_state.rise = rise
 
     # -- text positioning ----------------------------------------------------------
 
-    def adjustCurrentPosition(self, x, y):
+    def adjust_current_position(self, x, y):
         a, b, _, c, d, _, e, f, _ = self.text_line_matrix
         self.text_matrix = self.text_line_matrix = (
             a, b, 0.0, c, d, 0.0,
             (x * a) + (y * c) + e, (x * b) + (y * d) + f, 1.0,
         )
 
-    def adjustCurrentPositionWithLeading(self, x, y):
-        self.setLeading(-y)
-        self.adjustCurrentPosition(x, y)
+    def adjust_current_position_with_leading(self, x, y):
+        self.set_leading(-y)
+        self.adjust_current_position(x, y)
 
-    def setTextMatrix(self, a, b, c, d, e, f):
+    def set_text_matrix(self, a, b, c, d, e, f):
         self.text_matrix = self.text_line_matrix = (a, b, 0.0, c, d, 0.0, e, f, 1.0)
 
-    def newLine(self):
-        self.adjustCurrentPosition(0, -self.graphics_state.text_state.leading)
+    def new_line(self):
+        self.adjust_current_position(0, -self.graphics_state.text_state.leading)
 
-    # -- text showing -----------------------------------------------------------------
+    # -- text showing (reference graphics/stream.ts:859-894) ---------------------------
 
-    def showString(self, buffer: bytes):  # pragma: no cover - abstract
-        raise NotImplementedError
-
-    def showStrings(self, array: list):
-        for item in array:
-            if isinstance(item, bytes):
-                self.showString(item)
-            else:
-                # negative numbers move rightward (spaces); positive = kerning
-                self.advance_text_matrix(-item, 0, 0)
-
-    def newLineAndShowString(self, buffer: bytes):
-        self.newLine()
-        self.showString(buffer)
-
-    def newLineAndShowStringWithSpacing(self, word_space, char_space, buffer: bytes):
-        self.setWordSpacing(word_space)
-        self.setCharSpacing(char_space)
-        self.newLineAndShowString(buffer)
-
-    # -- marked content / compatibility: no-ops -----------------------------------------
-
-    def designatedMarkedContentPoint(self, tag):
-        pass
-
-    def designatedMarkedContentPointProperties(self, tag, properties):
-        pass
-
-    def beginMarkedContent(self, tag):
-        pass
-
-    def beginMarkedContentWithDictionary(self, tag, dictionary):
-        pass
-
-    def endMarkedContent(self):
-        pass
-
-    def beginCompatibility(self):
-        pass
-
-    def endCompatibility(self):
-        pass
-
-    def setType3FontCharWidthShapeColor(self, *args):
-        pass
-
-    def setType3FontCharWidthShape(self, *args):
-        pass
-
-
-class TextAtomDrawingContext(DrawingContext):
-    """Collects positioned TextAtoms (reference graphics/stream.ts:859-894)."""
-
-    def __init__(self, text_atoms: list, resources, depth: int = 0):
-        super().__init__(resources, depth)
-        self.text_atoms = text_atoms
-
-    def showString(self, buffer: bytes):
+    def show_string(self, buffer: bytes):
         font_name = self.graphics_state.text_state.font_name
         resources = self.resources
         key = (id(resources), font_name)
@@ -625,3 +362,37 @@ class TextAtomDrawingContext(DrawingContext):
             "x": x, "y": y, "width": width, "height": height,
             "fontName": font_name, "font": font, "buffer": buffer, "text": text,
         })
+
+    def show_strings(self, array: list):
+        for item in array:
+            if isinstance(item, bytes):
+                self.show_string(item)
+            else:
+                # negative numbers move rightward (spaces); positive = kerning
+                self.advance_text_matrix(-item, 0, 0)
+
+    def new_line_and_show_string(self, buffer: bytes):
+        self.new_line()
+        self.show_string(buffer)
+
+    def new_line_and_show_string_with_spacing(self, word_space, char_space,
+                                              buffer: bytes):
+        self.set_word_spacing(word_space)
+        self.set_char_spacing(char_space)
+        self.new_line_and_show_string(buffer)
+
+    # operator -> handler, called as handler(self, *operands)
+    OPERATORS = {
+        "q": push_graphics_state, "Q": pop_graphics_state, "cm": set_ctm,
+        "gs": set_graphics_state_parameters, "Do": draw_object,
+        "BT": start_text_block, "ET": end_text_block,
+        "Tc": set_char_spacing, "Tw": set_word_spacing,
+        "Tz": set_horizontal_scale, "TL": set_leading, "Tf": set_font,
+        "Ts": set_rise,
+        "Td": adjust_current_position,
+        "TD": adjust_current_position_with_leading,
+        "Tm": set_text_matrix, "T*": new_line,
+        "Tj": show_string, "TJ": show_strings,
+        "'": new_line_and_show_string,
+        '"': new_line_and_show_string_with_spacing,
+    }

@@ -1,9 +1,15 @@
 """Large-scale training-data operators over the documents/embeddings tables.
 
-Everything here is expressed in DataFrame operations with built-in
-(JVM-side, codegen'd) functions — no Python UDFs in any hot path except
-the explicitly Arrow-batched multimodal decode stubs. Each operator has
-an ANSI-SQL oracle twin in __spark_entry__.oracle_sql().
+Most operators are DataFrame operations over built-in (JVM-side,
+codegen'd) functions. Python runs only inside Arrow-batched
+``mapInPandas`` passes, never as row-at-a-time UDFs:
+
+- dedup's numpy folds (MinHash-128 signatures, SimHash, shingles);
+- IVF cell assignment (similarity);
+- webtext's HTML/WARC/robots parsing and page building;
+- the multimodal decode and resize stubs.
+
+Each operator has an ANSI-SQL oracle twin in __spark_entry__.oracle_sql().
 """
 from .dedup import (dedup_clusters, dedup_clusters_128, dedup_exact,
                     exact_substring_dup, exact_substring_excise,

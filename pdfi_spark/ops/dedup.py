@@ -284,7 +284,7 @@ def _minhash128_sig_np(docs: DataFrame) -> DataFrame:
 
 # default signature path: the vectorized variant (bit-identical to the
 # HOF fold — tests/test_dedup_clusters.py compares them lane-for-lane;
-# tools/bench_minhash_udf.py holds the measured ratio)
+# measured 2.10x the HOF fold at sf0.1, CLAUDE.md "Round-4 design facts")
 _minhash128_sig = _minhash128_sig_np
 
 

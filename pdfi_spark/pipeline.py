@@ -52,12 +52,11 @@ ARROW_BATCH_SIZE = 64  # default for multi-MB real PDFs; bench corpora override 
 
 
 def make_spark(app_name: str = "pdfi_spark", master: str | None = None,
-               shuffle_partitions: int = 32,
-               advisory_partition_size: str | None = None) -> SparkSession:
+               shuffle_partitions: int = 32) -> SparkSession:
     """Session factory with the pipeline's physical knobs set.
 
-    ``advisory_partition_size`` sizes AQE's post-shuffle partition
-    coalescing BY BYTES instead of pinning partition count to the core
+    AQE coalesces post-shuffle partitions BY BYTES (the advisory
+    partition size) instead of pinning partition count to the core
     count (``parallelismFirst=false`` below — the tuning-guide-
     recommended setting): iterative operators (connected components,
     PageRank/HITS rounds) produce many near-empty shuffles whose 32
@@ -67,8 +66,7 @@ def make_spark(app_name: str = "pdfi_spark", master: str | None = None,
     mix); a production cluster raises it to the guide's 128-256 MB via
     the env override ``PDFI_SPARK_ADVISORY_PARTITION``.
     """
-    advisory = (advisory_partition_size
-                or os.environ.get("PDFI_SPARK_ADVISORY_PARTITION", "8m"))
+    advisory = os.environ.get("PDFI_SPARK_ADVISORY_PARTITION", "8m")
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
@@ -91,9 +89,6 @@ def make_spark(app_name: str = "pdfi_spark", master: str | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_SIZE))
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # overwrite only the bucket partitions a wave touches, never the
-        # whole output root (which also holds the commit manifest)
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .getOrCreate()
     )
 
@@ -243,29 +238,6 @@ def run_pipeline(spark: SparkSession, documents: DataFrame, output_dir: str,
 
     Returns a summary dict with totals and resume stats.
     """
-    # the per-wave partitionBy overwrite is only additive under DYNAMIC
-    # partition-overwrite; a vanilla session defaults to STATIC, which
-    # would wipe previously committed buckets (and the manifest) on wave
-    # 2 — pin it here and restore after, like streaming's timezone pin
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        return _run_pipeline_inner(
-            spark, documents, output_dir, run_id, n_buckets, wave_size,
-            payload_col,
-        )
-    finally:
-        if prev_mode is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
-
-
-def _run_pipeline_inner(spark: SparkSession, documents: DataFrame,
-                        output_dir: str, run_id: str, n_buckets: int,
-                        wave_size: int | None, payload_col: str) -> dict:
     store = CheckpointStore(output_dir)
     done = store.committed_buckets()
     bucketed = with_bucket(documents, n_buckets=n_buckets)
@@ -303,8 +275,11 @@ def _run_pipeline_inner(spark: SparkSession, documents: DataFrame,
                 F.percentile_approx(F.when(onb, F.col("_ms")), 0.99).alias(f"p99_{b}"),
             ])
         observed = extracted.observe(obs, *aggs)
+        # DYNAMIC overwrite replaces only the buckets this wave writes; a
+        # session default of STATIC would wipe earlier waves' buckets
         observed.select("url", "text", "n_pages", "n_chars", "error", "_nbytes", "bucket") \
-            .write.mode("overwrite").partitionBy("bucket").parquet(output_dir)
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+            .partitionBy("bucket").parquet(output_dir)
         wall_ms = int((time.time() - start) * 1000)
         stats = obs.get
         for bucket in wave:

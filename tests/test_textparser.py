@@ -121,13 +121,69 @@ def test_inline_image_data_consumed_and_ignored():
         "BT", "Tj", "ET", "BI", "EI", "BT", "Tj", "ET"
     ]
     ei = ops[4]
-    assert ei["alias"] == "endInlineImage"
     # dict params were pushed as operands, raw image bytes captured last
     # raw payload verbatim incl. surrounding whitespace (the reference's
     # IMAGEDATA machine also keeps every byte between ID and EI)
     assert ei["operands"][-1] == b" \x00\xff\x10( "
     texts = [op["operands"][0] for op in ops if op["operator"] == "Tj"]
     assert texts == [b"before", b"after"]
+
+
+def _atoms(content_stream: bytes) -> list[tuple]:
+    from pdfi_spark.core.content import TextAtomDrawingContext
+
+    atoms = []
+    TextAtomDrawingContext(atoms, create_mock_resources()).apply_content_stream(
+        content_stream
+    )
+    return [(a["x"], a["y"], a["width"], a["height"], a["text"]) for a in atoms]
+
+
+def test_skipped_operators_leave_text_unchanged():
+    """Path, paint, clip, color, shading, inline-image, marked-content,
+    compatibility, Type 3 glyph, rendering-mode and general graphics-state
+    operators (and unknown ones) consume their operands and change no
+    text position (reference graphics/stream.ts:791-793)."""
+    text_only = (
+        b"BT /F10 11 Tf 1 0 0 1 72 700 Tm (first) Tj 14 TL T* (second) Tj"
+        b" [(third) -250 (fourth)] TJ ET"
+    )
+    interleaved = (
+        b"2 w 1 J 0 j 10 M [3 1] 0 d /Perceptual ri 1 i"
+        b" 0 0 m 10 10 l 1 2 3 4 5 6 c 1 2 3 4 v 1 2 3 4 y h 0 0 50 50 re"
+        b" S s f F f* B B* b b* n W n W* n"
+        b" /DeviceRGB CS /DeviceRGB cs 0.1 0.2 0.3 SC 0.4 SCN 0.5 sc 0.6 scn"
+        b" 0.5 G 0.5 g 1 0 0 RG 0 1 0 rg 0 0 0 1 K 0 0 0 1 k /Sh0 sh"
+        b" BI /W 2 /H 2 /BPC 8 ID \x00\xff EI"
+        b" /Tag MP /Tag <</MCID 0>> DP /Span BMC /Span <</MCID 1>> BDC"
+        b" BX 1 2 3 zz EX 500 0 d0 500 0 0 0 500 500 d1"
+        b" BT /F10 11 Tf 3 Tr 1 0 0 1 72 700 Tm 0 0 m EMC (first) Tj"
+        b" 0.5 g 14 TL T* 7 Tr (second) Tj /X MP"
+        b" [(third) -250 (fourth)] TJ 1 w ET EMC"
+    )
+    assert _atoms(interleaved) == _atoms(text_only)
+    assert [a[-1] for a in _atoms(text_only)] == ["first", "second", "third", "fourth"]
+
+
+def test_skipped_operator_with_wrong_operand_count_extracts():
+    # a one-operand `m` is malformed, but a skipped operator never checks
+    # arity (the reference calls handlers through JS apply), so the
+    # document extracts instead of becoming an error row
+    from pdfi_spark.core.api import extract_record
+    from pdfi_spark.core.pdfgen import make_single_page
+
+    pdf = make_single_page(b"10 m BT /F1 12 Tf (hi) Tj ET")
+    record = extract_record("u", pdf)
+    assert record["error"] is None
+    assert record["text"] == "# \nhi"
+
+
+def test_live_operator_with_wrong_operand_count_is_an_error_row():
+    from pdfi_spark.core.api import extract_record
+    from pdfi_spark.core.pdfgen import make_single_page
+
+    pdf = make_single_page(b"BT /F1 12 Tf 10 Td (hi) Tj ET")
+    assert extract_record("u", pdf)["error"].startswith("TypeError")
 
 
 def test_form_xobject_font_shadowing_resolves_per_resources():
